@@ -26,15 +26,8 @@ object textnative {
   def wordNgrams(text: Column, n: Int): Column =
     ColumnBridge.column(WordNgramsExpr(ColumnBridge.expression(text), n))
 
-  /** One BPE merge step (adjacent lhs,rhs → lhs+rhs, greedy left-to-right)
-    * over a symbol-array column — see [[BpeMergeStepExpr]].
-    */
-  def bpeMergeStep(syms: Column, lhs: String, rhs: String): Column =
-    ColumnBridge.column(
-      BpeMergeStepExpr(ColumnBridge.expression(syms), lhs, rhs))
-
   /** An ordered CHAIN of BPE merge steps in one expression — semantically
-    * identical to folding [[bpeMergeStep]] left-to-right over `merges`
+    * identical to folding [[BpeMergeStepExpr]] left-to-right over `merges`
     * (asserted in TextAnalysisSpec), but the merge table rides the plan as
     * ONE reference object instead of k nested expression nodes, so every
     * learner round and every consumer query generates the SAME whole-stage
@@ -136,11 +129,9 @@ object WordNgramsExpr {
   * non-empty), so merging never creates a new occurrence to the left of
   * the scan point.
   *
-  * Codegen'd via a static one-pass compute over the array — the merge
-  * learning loop chains one of these per learned step over the
-  * vocabulary table (words × symbols, never the corpus), so it must not
-  * knock the projection out of whole-stage codegen the way an
-  * ArrayTransform lambda would.
+  * Its static one-pass `compute` is the rule [[BpeMergeAllExpr]] runs per
+  * merge; the expression itself is TextAnalysisSpec's single-step
+  * reference for that chain.
   */
 case class BpeMergeStepExpr(child: Expression, lhs: String, rhs: String)
     extends UnaryExpression {

@@ -3,7 +3,7 @@ package graft.operators
 import graft.functions.expressions.sketch
 import graft.functions.text
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication family over `documents` (SURVEY §2.9 Q18/Q21 + the
@@ -276,20 +276,10 @@ object Dedup {
     // resolved by one post-loop join, never shuffled per round.
     //
     // The convergence scalar (label sum, strictly decreasing until the
-    // fixpoint) rides the SAME job as the label materialization via
-    // `observe` (r19): the checkpoint action fires the CollectMetrics
-    // node, so the sum costs zero extra jobs — previously each round paid
-    // a separate scan-the-checkpoint aggregation job, pure scheduling
-    // latency at per-round data sizes (guide §1.2: the distributed
-    // algorithm's job COUNT is the wall here, not data volume). The label
-    // math is untouched; DedupSpec's exactness + union-find cross-checks
-    // pin it.
-    def withSum(df: DataFrame): (DataFrame, () => Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs, coalesce(sum(col("lab")), lit(0L)).as("s"))
-        .localCheckpoint()
-      (ck, () => obs.get("s").asInstanceOf[Number].longValue)
-    }
+    // fixpoint) rides the SAME job as each label materialization
+    // (Materialize.cut): at per-round data sizes the distributed
+    // algorithm's job COUNT is the wall, not data volume (guide §1.2).
+    val labSum = coalesce(sum(col("lab")), lit(0L))
     // Init = the post-round-1 state computed directly (r18): with identity
     // labels, round 1's neighbor-min is min(v, min incoming source) and
     // its pointer jump contributes only identity rows — so labels can
@@ -301,12 +291,12 @@ object Dedup {
     // contraction is a per-round optimization, not a correctness input,
     // so the fixpoint is unchanged; exactness + contraction-soundness +
     // union-find cross-check specs in DedupSpec pin this).
-    val (labels0, sum0) = withSum(
+    val (labels0, Row(sum0: Long)) = Materialize.cut(
       edges.select(col("s").as("v"), col("s").as("lab"))
         .union(edges.select(col("d").as("v"), col("s").as("lab")))
-        .groupBy(col("v")).agg(min(col("lab")).as("lab")))
+        .groupBy(col("v")).agg(min(col("lab")).as("lab")), labSum)
     var labels = labels0
-    var cur = sum0()
+    var cur = sum0
     var done = false
     var round = 0
     while (!done && round < maxRounds) {
@@ -322,10 +312,9 @@ object Dedup {
         .join(labels.select(col("v").as("ptr2"), col("lab")),
           col("ptr") === col("ptr2"))
         .select(col("v"), col("lab"))
-      val (next, nextSumF) = withSum(
+      val (next, Row(nextSum: Long)) = Materialize.cut(
         labels.union(neigh).union(jump)
-          .groupBy(col("v")).agg(min(col("lab")).as("lab")))
-      val nextSum = nextSumF()
+          .groupBy(col("v")).agg(min(col("lab")).as("lab")), labSum)
       done = nextSum == cur
       cur = nextSum
       labels = next
@@ -537,21 +526,6 @@ object Dedup {
     * corpus shuffle.
     */
   private def cutFlagged(docs: DataFrame, flagged: DataFrame): DataFrame =
-    cutFlaggedRows(docs, flagged)
-      // the presentation sort's range sampling re-executes the join + the
-      // per-token zip_with/exists cut chain (the expensive part of this
-      // tail) — materialize the finished rows once (q112/q141's lesson);
-      // shared by q84 and q86. PlanSpec pins the pre-materialization plan
-      // through [[q86PlanProbe]] (the checkpoint truncates the visible
-      // final plan to a scan+sort, exactly like q88's staged frames).
-      .localCheckpoint()
-      .orderBy(col("doc_id"))
-
-  /** The cut tail's frame BEFORE the materialize+sort — the plan surface
-    * the q84/q86 broadcast/shuffle-shape assertions inspect.
-    */
-  private[graft] def cutFlaggedRows(docs: DataFrame,
-      flagged: DataFrame): DataFrame =
     docs.join(flagged, Seq("doc_id"), "left")
       .select(col("doc_id"),
         // null-input parity with the oracle's coalesce-to-0/'' tail: a null
@@ -573,6 +547,7 @@ object Dedup {
       .select(col("doc_id"), col("n_tokens"),
         (col("n_tokens") - size(col("kept"))).as("n_cut"),
         array_join(col("kept"), " ").as("cleaned"))
+      .transform(Materialize.sortCut(col("doc_id")))
 
   /** q86: benchmark decontamination SURGERY — the remove step downstream of
     * q57/q66's detection (window semantics shared with q84): every 8-token
@@ -598,15 +573,6 @@ object Dedup {
     * split — planted-corpus specs run it directly.
     */
   def decontaminateCut(docs: DataFrame, evalEvery: Long): DataFrame = {
-    val (train, flagged) = decontaminateFlagged(docs, evalEvery)
-    cutFlagged(train, flagged)
-  }
-
-  /** q86's (train, flagged-starts) pair — the flagging plan before the cut
-    * tail, shared by the registered query and [[q86PlanProbe]].
-    */
-  private def decontaminateFlagged(docs: DataFrame,
-      evalEvery: Long): (DataFrame, DataFrame) = {
     val cores = docs.sparkSession.sparkContext.defaultParallelism
     val base = docs.filter(col("doc_id").isNotNull)
     val train = base.filter(col("doc_id") % evalEvery =!= 0)
@@ -625,20 +591,7 @@ object Dedup {
       // needs no exchange
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("pos"))).as("starts"))
-    (train, flagged)
-  }
-
-  /** q86's full computation WITHOUT the final materialize+sort — the plan
-    * PlanSpec's broadcast/shuffle-shape assertions read (the registered
-    * q86 checkpoints the finished rows, which truncates its own visible
-    * plan to a checkpoint scan + sort).
-    */
-  private[graft] def q86PlanProbe(spark: SparkSession,
-      dir: String): DataFrame = {
-    val (train, flagged) = decontaminateFlagged(
-      Tables.documents(spark, dir).select(col("doc_id"), col("text")),
-      Pipeline.EvalEvery)
-    cutFlaggedRows(train, flagged).orderBy(col("doc_id"))
+    cutFlagged(train, flagged)
   }
 
   // ---- End-to-end dedup verdict (q76) -------------------------------------

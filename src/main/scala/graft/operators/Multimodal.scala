@@ -812,14 +812,8 @@ object Multimodal {
       .select(col("media_id"), col("window_no"),
         col("n_samples").cast("int").as("n_samples"),
         col("sum_sq"), col("zero_crossings"))
-      // materialize the clips×windows INTEGER frame before the
-      // presentation sort: orderBy's range-partitioner sampling is a
-      // separate execution, and uncached it re-ran the synth+decode
-      // subtree — the ×19.1 sf1→sf10 decade blowup of r17's sweep
-      // (SCALE_CHECK_sf10_r17 finding 3). Payload left the plan at
-      // decode; what checkpoints is 5 longs per window.
-      .localCheckpoint()
-      .orderBy(col("media_id"), col("window_no"))
+      // payload left the plan at decode: the cut holds 5 integers per window
+      .transform(Materialize.sortCut(col("media_id"), col("window_no")))
 
   /** q141's decode + windowed-feature pass over ANY (media_id, media) WAV
     * frame, parameterized by window size: q141 reports at [[AudioWindow]];

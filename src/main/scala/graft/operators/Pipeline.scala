@@ -487,11 +487,7 @@ object Pipeline {
             regexp_replace(col("text"), UrlRe, "<URL>"),
             EmailRe, "<EMAIL>"),
           LongNumRe, "<NUM>").as("redacted"))
-      // presentation-sort range sampling re-executes this scan-level
-      // child (no shuffle below to resume from) — uncheckpointed, the
-      // per-row expression work ran twice per run (the q112/q141 lesson)
-      .localCheckpoint()
-      .orderBy(col("doc_id"))
+      .transform(Materialize.sortCut(col("doc_id")))
 
   /** q114: markup strip — the HTML-to-text preprocessing every web-crawl
     * corpus runs BEFORE any quality/dedup stage (the CCNet/C4 extraction
@@ -527,34 +523,13 @@ object Pipeline {
     * CurationRun's opt-in pre-funnel transform runs the identical
     * expression.
     */
-  def markupStrip(docs: DataFrame): DataFrame =
-    markupStripRows(docs)
-      // presentation-sort range sampling re-executes this scan-level
-      // child (no shuffle below to resume from) — uncheckpointed, the
-      // per-row expression work ran twice per run (the q112/q141 lesson).
-      // PlanSpec pins the pre-materialization plan through
-      // [[q114PlanProbe]] (q86PlanProbe's precedent).
-      .localCheckpoint()
-      .orderBy(col("doc_id"))
-
-  /** The strip battery BEFORE the materialize+sort — the plan surface the
-    * q114 joinless-codegen assertions inspect.
-    */
-  private def markupStripRows(docs: DataFrame): DataFrame = {
+  def markupStrip(docs: DataFrame): DataFrame = {
     val t = coalesce(col("text"), lit(""))
     val clean = text.stripMarkup(col("text"))
     docs.select(col("doc_id"), clean.as("clean_text"),
       (length(t) - length(clean)).cast("long").as("n_removed"))
+      .transform(Materialize.sortCut(col("doc_id")))
   }
-
-  /** q114's full computation WITHOUT the final materialize — the plan
-    * PlanSpec's gate-battery assertions read (the registered q114
-    * checkpoints before its presentation sort, which truncates its own
-    * visible plan to a checkpoint scan + sort).
-    */
-  private[graft] def q114PlanProbe(spark: SparkSession,
-      dir: String): DataFrame =
-    markupStripRows(Tables.documents(spark, dir)).orderBy(col("doc_id"))
 
   /** q127: within-document line dedup — the self-boilerplate cut CCNet
     * applies per PAGE before any corpus-level stage (navigation chrome,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.expressions.vecexprs
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** A fitted coarse quantizer for the IVF family (q39/q85/q92b): maps an
@@ -143,9 +143,9 @@ object Quantizers {
     */
   def fitCentroids(clean: DataFrame, k: Int): Array[Array[Double]] = {
     import org.apache.spark.ml.functions.array_to_vector
-    // sample count rides the checkpoint job (Similarity.ckptWithCount)
-    val (sample, n) = Similarity.ckptWithCount(
-      fitSample(clean, k).withColumn("fv", array_to_vector(col("v"))))
+    val (sample, Row(n: Long)) = Materialize.cut(
+      fitSample(clean, k).withColumn("fv", array_to_vector(col("v"))),
+      count(lit(1)))
     kmeansCenters(sample, math.min(k, n.toInt))
   }
 
@@ -156,33 +156,29 @@ object Quantizers {
     */
   def fitImiCodebooks(clean: DataFrame,
       kTotal: Int): (Array[Array[Double]], Array[Array[Double]]) = {
-    import org.apache.spark.ml.functions.array_to_vector
+    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
     val k1 = math.min(FlatCellCap,
       math.max(1, math.ceil(math.sqrt(kTotal.toDouble)).toInt))
     val k2 = math.min(FlatCellCap,
       math.max(1, math.ceil(kTotal.toDouble / k1).toInt))
     val half = floor(size(col("v")) / 2).cast("int")
-    // sample count AND the dim gate ride the checkpoint job itself (the
-    // ckptWithCount idiom, plus min(size(v)) as a second observed metric
-    // — identical to the old first-row probe on the uniform-dim input the
-    // fit requires, and it replaces a dedicated head() job)
-    val obs = org.apache.spark.sql.Observation()
-    val sample = fitSample(clean, math.max(k1, k2))
-      .observe(obs, count(lit(1)).as("n"),
-        coalesce(min(size(col("v"))), lit(0)).as("mindim"))
-      .select(
-        array_to_vector(slice(col("v"), lit(1), half)).as("fva"),
-        array_to_vector(slice(col("v"), half + 1, size(col("v"))))
-          .as("fvb"))
-      .localCheckpoint()
-    val n = obs.get("n").asInstanceOf[Number].intValue
+    // sample count AND the dim gate ride the checkpoint job itself; the
+    // gate reads the smallest first half-space, which is empty exactly when
+    // dim < 2 (only the two half-space vectors materialize)
+    val (sample, Row(n: Long, minHalf: Int)) = Materialize.cut(
+      fitSample(clean, math.max(k1, k2))
+        .select(
+          array_to_vector(slice(col("v"), lit(1), half)).as("fva"),
+          array_to_vector(slice(col("v"), half + 1, size(col("v"))))
+            .as("fvb")),
+      count(lit(1)), coalesce(min(size(vector_to_array(col("fva")))), lit(0)))
     require(n > 0, "IMI quantizer cannot fit an empty corpus")
-    require(obs.get("mindim").asInstanceOf[Number].intValue >= 2,
+    require(minHalf >= 1,
       "IMI quantizer needs dim >= 2 (first half-space is empty)")
     val cbA = kmeansCenters(sample.select(col("fva").as("fv")),
-      math.min(k1, n))
+      math.min(k1, n.toInt))
     val cbB = kmeansCenters(sample.select(col("fvb").as("fv")),
-      math.min(k2, n))
+      math.min(k2, n.toInt))
     (cbA, cbB)
   }
 
@@ -200,17 +196,12 @@ object Quantizers {
       k: Int): Array[Array[Array[Double]]] = {
     import org.apache.spark.ml.functions.array_to_vector
     import scala.collection.parallel.CollectionConverters._
-    // count AND dim ride the checkpoint job (min(size(v)) equals the old
-    // first-row dim probe on the uniform-dim input the fit requires, and
-    // replaces a dedicated head() job)
-    val obs = org.apache.spark.sql.Observation()
-    val sample = fitSample(clean, k)
-      .observe(obs, count(lit(1)).as("n"),
-        coalesce(min(size(col("v"))), lit(0)).as("dim"))
-      .localCheckpoint()
-    val n = obs.get("n").asInstanceOf[Number].intValue
+    // count AND dim ride the checkpoint job (min(size(v)) equals a
+    // first-row dim probe on the uniform-dim input the fit requires)
+    val (sample, Row(n: Long, dim: Int)) = Materialize.cut(
+      fitSample(clean, k),
+      count(lit(1)), coalesce(min(size(col("v"))), lit(0)))
     require(n > 0, "PQ quantizer cannot fit an empty corpus")
-    val dim = obs.get("dim").asInstanceOf[Number].intValue
     require(dim >= m, s"PQ needs dim >= $m subspaces, got $dim")
     // the M fits are independent jobs over the one materialized sample —
     // submit them concurrently (driver threads; local[32] has the slack,
@@ -224,7 +215,7 @@ object Quantizers {
       kmeansCenters(
         sample.select(array_to_vector(
           slice(col("v"), lit(lo + 1), lit(hi - lo))).as("fv")),
-        math.min(k, n))
+        math.min(k, n.toInt))
     }.toArray
   }
 

@@ -67,11 +67,7 @@ object Scalars {
         sqrt(col("o_totalprice")).as("price_sqrt"),
         (col("o_totalprice").cast("decimal(18,2)") * lit(BigDecimal("1.1")))
           .cast("double").as("price_up"))
-      // presentation-sort range sampling re-executes this scan-level
-      // child (no shuffle below to resume from) — uncheckpointed, the
-      // per-row expression work ran twice per run (the q112/q141 lesson)
-      .localCheckpoint()
-      .orderBy(col("o_orderkey"))
+      .transform(Materialize.sortCut(col("o_orderkey")))
 
   /** Q17a: JSON scalar extraction over events.props. The path is extracted
     * ONCE in an inner projection and the derived columns reference it — the
@@ -88,11 +84,7 @@ object Scalars {
         col("k_str"),
         col("k_str").cast("int").as("k_int"),
         col("k_str").isNotNull.as("has_k"))
-      // presentation-sort range sampling re-executes this scan-level
-      // child (no shuffle below to resume from) — uncheckpointed, the
-      // per-row expression work ran twice per run (the q112/q141 lesson)
-      .localCheckpoint()
-      .orderBy(col("event_id"))
+      .transform(Materialize.sortCut(col("event_id")))
 
   /** Q17b: array scalars over documents tokens. */
   def q17Array(spark: SparkSession, dir: String): DataFrame = {
@@ -106,11 +98,7 @@ object Scalars {
         element_at(toks, -1).as("last_token"),
         array_contains(toks, "spark").as("has_spark"),
         concat_ws(" ", slice(sort_array(toks), 1, 3)).as("sorted_first3"))
-      // presentation-sort range sampling re-executes this scan-level
-      // child (no shuffle below to resume from) — uncheckpointed, the
-      // per-row expression work ran twice per run (the q112/q141 lesson)
-      .localCheckpoint()
-      .orderBy(col("doc_id"))
+      .transform(Materialize.sortCut(col("doc_id")))
   }
 
   /** q43: MAP-typed scalars — props parsed to map<string,int>, then key
@@ -131,11 +119,7 @@ object Scalars {
         element_at(col("m"), "k").as("k_val"),
         size(map_keys(col("m"))).as("n_keys"),
         concat_ws(",", array_sort(map_keys(col("m")))).as("keys_csv"))
-      // presentation-sort range sampling re-executes this scan+parse
-      // child (no shuffle below to resume from): uncheckpointed, every
-      // row paid from_json twice per run (the q112/q141 lesson)
-      .localCheckpoint()
-      .orderBy(col("event_id"))
+      .transform(Materialize.sortCut(col("event_id")))
   }
 
   /** Sketch precision for q95 (Datasketches lgConfigK): 2^12 registers,

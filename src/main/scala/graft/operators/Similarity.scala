@@ -3,7 +3,7 @@ package graft.operators
 import graft.functions.expressions.vecexprs
 import graft.functions.vectors
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,19 +26,6 @@ import org.apache.spark.sql.functions._
   * and carry no spread — see InvertedIndex.documentPostings / Multimodal.
   */
 object Similarity {
-
-  /** Eager localCheckpoint + row count in ONE job (r19, the CC `observe`
-    * idiom): the sizing/empty-test count that every ANN entry takes right
-    * after materializing its base frame was a second scan-the-checkpoint
-    * job — pure scheduling latency. The CollectMetrics node fires on the
-    * checkpoint action itself, so the count is free; the returned frame's
-    * rows are untouched.
-    */
-  private[operators] def ckptWithCount(df: DataFrame): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-    (ck, obs.get("n").asInstanceOf[Number].longValue)
-  }
 
   /** Shared ranking tail for the exact and ANN variants: rank candidates
     * per probe by (cosine DESC, neighbor_id), keep top `TopK`, round to
@@ -223,8 +210,8 @@ object Similarity {
   def hardNegativesIvf(probeSrc: DataFrame, candidateSrc: DataFrame,
       k: Int): DataFrame = {
     // one captured count serves both the empty-corpus test and the cell
-    // sizing, riding the checkpoint job itself (ckptWithCount)
-    val (cand, n) = ckptWithCount(candidateSrc)
+    // sizing
+    val (cand, Row(n: Long)) = Materialize.cut(candidateSrc, count(lit(1)))
     if (n == 0)
       return cand.select(col("id").as("probe_id"), lit(1).as("rnk"),
         col("id").as("cand_id"), lit(0.0).as("cosine"))
@@ -328,9 +315,10 @@ object Similarity {
     * equality-of-verdict spec on planted strays against the anchor form.
     */
   def embeddingOutliersKMeans(src: DataFrame, k: Int): DataFrame = {
-    // the empty test rides the checkpoint job (ckptWithCount) instead of
-    // paying a separate isEmpty probe of the materialized frame
-    val (clean, nClean) = ckptWithCount(definedCosine(src))
+    // the empty test rides the checkpoint job instead of paying a separate
+    // isEmpty probe of the materialized frame
+    val (clean, Row(nClean: Long)) =
+      Materialize.cut(definedCosine(src), count(lit(1)))
     if (nClean == 0)
       return clean.select(col("vec_id"), col("vec_id").as("cluster_id"),
         lit(0.0).as("cos_dist"), lit(0.0).as("z"), lit(false).as("is_outlier"))
@@ -502,8 +490,7 @@ object Similarity {
     // Materialize the (id, v) frame ONCE before anything reads it: the
     // plane-sizing count and the bucketing explode would otherwise re-run
     // the whole upstream pipeline (ADVICE r17 — a real extra pass at sf10).
-    // (checkpoint + plane-sizing count in one job — ckptWithCount)
-    val (b, nB) = ckptWithCount(base)
+    val (b, Row(nB: Long)) = Materialize.cut(base, count(lit(1)))
     // the count sizes the planes (the q92b captured-count idiom): the
     // self-join's bucket fan-in must shrink as the corpus grows
     val planes = planesFor(nB)
@@ -712,7 +699,7 @@ object Similarity {
       // null embeddings can't train or be assigned a cell; the cosine
       // tiers drop them via null propagation, the IVF tier drops them here
       .filter(col("v").isNotNull)
-    val (base, n) = ckptWithCount(baseRaw)
+    val (base, Row(n: Long)) = Materialize.cut(baseRaw, count(lit(1)))
     if (n == 0) return emptyTopK(spark)
     ivfTopK(base, Quantizers.quantizerFor(base, ivfCellsFor(n)))
   }
@@ -1041,7 +1028,7 @@ object Similarity {
       .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
       .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
       .filter(col("v").isNotNull)
-    val (base, n) = ckptWithCount(baseRaw)
+    val (base, Row(n: Long)) = Materialize.cut(baseRaw, count(lit(1)))
     if (n == 0) return emptyTopK(spark)
     // The coarse-quantizer and PQ-codebook fits are data-independent reads
     // of the same materialized base (each draws its own deterministic
@@ -1501,7 +1488,7 @@ object Similarity {
       .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
       .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
       .filter(col("v").isNotNull)
-    val (base, n) = ckptWithCount(baseRaw)
+    val (base, Row(n: Long)) = Materialize.cut(baseRaw, count(lit(1)))
     if (n == 0) return emptyTopK(spark)
     pqAdcTopK(base,
       Quantizers.pqFitCodebooks(base, PqSubspaces, PqCodewords))
@@ -1624,8 +1611,8 @@ object Similarity {
   def semanticDeconQuantized(evalSet: DataFrame, train: DataFrame,
       threshold: Double): DataFrame = {
     // one captured count: empty short-circuit AND cell sizing (the q92b
-    // single-probe idiom), riding the checkpoint job (ckptWithCount)
-    val (tr, n) = ckptWithCount(train)
+    // single-probe idiom)
+    val (tr, Row(n: Long)) = Materialize.cut(train, count(lit(1)))
     if (n == 0)
       return tr.select(col("vec_id"), lit(null).cast("long").as("eval_id"),
         lit(null).cast("double").as("cosine"), lit(false).as("contaminated"))
@@ -1713,7 +1700,7 @@ object Similarity {
     // vectors feed the quantizer fit, the cell explode, and two candidate
     // fetch joins: materialize once (q76 precedent); one captured count
     // serves both the empty test and the cell sizing
-    val (b, n) = ckptWithCount(base)
+    val (b, Row(n: Long)) = Materialize.cut(base, count(lit(1)))
     // KMeans cannot fit an empty corpus (q39 precedent); no vectors → no
     // pairs → the CC tail resolves everything as singletons
     val cells =
@@ -1753,7 +1740,7 @@ object Similarity {
       .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
       .select(col("vec_id"), vectors.toDouble(col("embedding")).as("v"))
       .filter(col("v").isNotNull)
-    val (b, n) = ckptWithCount(bRaw)
+    val (b, Row(n: Long)) = Materialize.cut(bRaw, count(lit(1)))
     if (n == 0) return semanticDedup(ids, b, SemDedupCosine)
     val tmp = java.nio.file.Files
       .createTempDirectory("graft-q104-model").toString
@@ -1761,7 +1748,7 @@ object Similarity {
       Quantizers.quantizerFor(b, ivfCellsFor(n)), s"$tmp/coarse")
     val quant = graft.sources.ModelStore.loadQuantizer(spark, s"$tmp/coarse")
     // inline [[semanticDedupQuantized]] minus its checkpoint: `b` is
-    // already materialized by the ckptWithCount above, and the wrapper's
+    // already materialized by the Materialize.cut above, and the wrapper's
     // unconditional localCheckpoint re-materialized the full corpus frame
     // a second time — one wasted corpus-sized job per q104 run (r19c
     // job-trace find; the wrapper keeps its checkpoint for callers that

@@ -120,36 +120,11 @@ object TextAnalysis {
     * directly.
     */
   def gopherRules(docs: DataFrame): DataFrame =
-    gopherRulesRows(docs)
-      // the presentation sort's range sampling is a SEPARATE execution of
-      // its child, and this child is the seven-regex signal projection
-      // sitting directly on the scan (no shuffle in between to resume
-      // from) — uncheckpointed, every signal computed twice per run
-      // (q141's lesson at batch-expression scale; measured −35% r18).
-      // What materializes is doc_id + 8 narrow signal columns. PlanSpec
-      // pins the pre-materialization plan through [[q112PlanProbe]] (the
-      // checkpoint truncates the visible final plan to a scan + sort,
-      // exactly like q86PlanProbe's precedent).
-      .localCheckpoint()
-      .orderBy(col("doc_id"))
-
-  /** The signal battery BEFORE the materialize+sort — the plan surface the
-    * q112 joinless-codegen assertions inspect (q86PlanProbe's precedent).
-    */
-  private def gopherRulesRows(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id") +:
         gopherSignals(col("text")).map { case (n, c) => c.as(n) }: _*)
       .withColumn("pass_gopher", gopherPass(col))
-
-  /** q112's full computation WITHOUT the final materialize — the plan
-    * PlanSpec's gate-battery assertions read (the registered q112
-    * checkpoints before its presentation sort, which truncates its own
-    * visible plan to a checkpoint scan + sort).
-    */
-  private[graft] def q112PlanProbe(spark: SparkSession,
-      dir: String): DataFrame =
-    gopherRulesRows(Tables.documents(spark, dir)).orderBy(col("doc_id"))
+      .transform(Materialize.sortCut(col("doc_id")))
 
   /** The seven q112 signal columns over a raw text column. */
   private def gopherSignals(raw: Column): Seq[(String, Column)] = {
@@ -851,12 +826,11 @@ object TextAnalysis {
     * over that table, which is bounded by DISTINCT words (~10^8 at web
     * scale), not corpus bytes. Each learning step is one map-side-
     * combinable pair-count aggregation plus a 1-row collect (the argmax —
-    * a model-fit boundary, same rule as the quantizer seeds) and one
-    * codegen'd merge projection ([[graft.functions.expressions
-    * .BpeMergeStepExpr]]), localCheckpointed so step k+1's aggregation
-    * re-reads materialized partitions instead of re-running k merge
-    * projections. K steps = K bounded shuffles of the vocab table; the
-    * corpus never reshuffles.
+    * a model-fit boundary, same rule as the quantizer seeds); the accepted
+    * merges ride the vocab lineage as ONE codegen'd
+    * [[graft.functions.expressions.BpeMergeAllExpr]] projection, cut every
+    * [[BpeCkptEveryMerges]] merges ([[bpeLearnRounds]]). K steps = K
+    * bounded shuffles of the vocab table; the corpus never reshuffles.
     *
     * Operating points: [[BpeSteps]] merges; words longer than
     * [[BpeMaxWordLen]] chars are excluded from BOTH the pair statistics
@@ -921,15 +895,25 @@ object TextAnalysis {
     else base.withColumn("syms",
       graft.functions.expressions.textnative.bpeMergeAll(col("syms"), pending))
 
-  /** Learn `steps` merges; returns (step, lhs, rhs, weight) in order. */
-  def bpeLearnMerges(docs: DataFrame,
-      steps: Int = BpeSteps): Seq[(Int, String, String, Long)] = {
+  /** The round loop every BPE learner shares. Each round is one
+    * map-side-combinable pair-count aggregation over the vocab (with the
+    * pending merges applied through lineage) plus one `lookahead`-row
+    * collect of the ranked pairs (count DESC, lhs, rhs — a total order):
+    * the argmax boundary of a model fit. `accept` picks the round's merges
+    * from that ranked list given the remaining step budget; it must return
+    * at least one pair. The loop stops at `steps` merges or when no word
+    * has two symbols left. Returns the (step, lhs, rhs, weight) table in
+    * order and the round count.
+    */
+  private def bpeLearnRounds(docs: DataFrame, steps: Int, lookahead: Int)(
+      accept: (Array[(String, String, Long)], Int) => Seq[(String, String, Long)])
+      : (Seq[(Int, String, String, Long)], Int) = {
     var base = bpeVocab(docs).localCheckpoint()
     val pending = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var k = 1
+    var rounds = 0
     var exhausted = false
-    while (k <= steps && !exhausted) {
+    while (out.size < steps && !exhausted) {
       if (pending.size >= BpeCkptEveryMerges) {
         base = vocabWithMerges(base, pending.toSeq).localCheckpoint()
         pending.clear()
@@ -943,18 +927,25 @@ object TextAnalysis {
         .groupBy(col("z.la").as("l"), col("z.ra").as("r"))
         .agg(sum(col("cnt")).as("c"))
         .orderBy(col("c").desc, col("l"), col("r"))
-        .limit(1).collect() // the argmax: 1 row, a model-fit boundary
+        .limit(lookahead).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       if (top.isEmpty) exhausted = true
       else {
-        val (l, r, c) =
-          (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
-        out += ((k, l, r, c))
-        pending += ((l, r))
-        k += 1
+        rounds += 1
+        val kept = accept(top, steps - out.size)
+        kept.foreach { case (l, r, c) => out += ((out.size + 1, l, r, c)) }
+        pending ++= kept.map { case (l, r, _) => (l, r) }
       }
     }
-    out.toSeq
+    (out.toSeq, rounds)
   }
+
+  /** Learn `steps` merges one per round (the argmax, lookahead 1);
+    * returns (step, lhs, rhs, weight) in order.
+    */
+  def bpeLearnMerges(docs: DataFrame,
+      steps: Int = BpeSteps): Seq[(Int, String, String, Long)] =
+    bpeLearnRounds(docs, steps, lookahead = 1)((top, _) => top.take(1).toSeq)._1
 
   /** q139: the learned merge table — (step, lhs, rhs, merged, weight). */
   def q139BpeMerges(spark: SparkSession, dir: String): DataFrame = {
@@ -1041,60 +1032,31 @@ object TextAnalysis {
     */
   def bpeLearnMergesBatched(docs: DataFrame, steps: Int = BpeSteps,
       maxPerRound: Int = 16, lookahead: Int = 64)
-      : (Seq[(Int, String, String, Long)], Int) = {
-    var base = bpeVocab(docs).localCheckpoint()
-    val pending = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rounds = 0
-    var exhausted = false
-    while (out.size < steps && !exhausted) {
-      if (pending.size >= BpeCkptEveryMerges) {
-        base = vocabWithMerges(base, pending.toSeq).localCheckpoint()
-        pending.clear()
+      : (Seq[(Int, String, String, Long)], Int) =
+    bpeLearnRounds(docs, steps, lookahead) { (top, budget) =>
+      val used = scala.collection.mutable.Set.empty[String]
+      val accepted =
+        scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+      // cq: the count bound below which sequential picks could diverge —
+      // the first conflicting pair, or the last collected row when the
+      // ranked table extends past the lookahead window
+      var cq = -1L
+      var i = 0
+      while (cq < 0 && i < top.length &&
+          accepted.size < math.min(maxPerRound, budget)) {
+        val (l, r, c) = top(i)
+        if (used(l) || used(r)) cq = c
+        else { accepted += top(i); used += l; used += r }
+        i += 1
       }
-      val top = vocabWithMerges(base, pending.toSeq)
-        .filter(size(col("syms")) >= 2)
-        .select(col("cnt"),
-          slice(col("syms"), lit(1), size(col("syms")) - 1).as("la"),
-          slice(col("syms"), lit(2), size(col("syms")) - 1).as("ra"))
-        .select(col("cnt"), explode(arrays_zip(col("la"), col("ra"))).as("z"))
-        .groupBy(col("z.la").as("l"), col("z.ra").as("r"))
-        .agg(sum(col("cnt")).as("c"))
-        .orderBy(col("c").desc, col("l"), col("r"))
-        .limit(lookahead).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      if (top.isEmpty) exhausted = true
-      else {
-        rounds += 1
-        val used = scala.collection.mutable.Set.empty[String]
-        val accepted =
-          scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        // cq: the count bound below which sequential picks could diverge —
-        // the first conflicting pair, or the last collected row when the
-        // ranked table extends past the lookahead window
-        var cq = -1L
-        var i = 0
-        while (cq < 0 && i < top.length &&
-            accepted.size < math.min(maxPerRound, steps - out.size)) {
-          val (l, r, c) = top(i)
-          if (used(l) || used(r)) cq = c
-          else { accepted += top(i); used += l; used += r }
-          i += 1
-        }
-        // loop may also exit at the cap or the lookahead horizon: every
-        // UNEXAMINED pair is a potential conflict, so the bound must cover
-        // the best of them (the next uncollected rank / the last collected
-        // row when the table extends past the window)
-        if (cq < 0 && i < top.length) cq = top(i)._3
-        else if (cq < 0 && top.length == lookahead) cq = top.last._3
-        val kept = accepted.head +:
-          accepted.tail.takeWhile(_._3 > cq).toSeq
-        kept.foreach { case (l, r, c) => out += ((out.size + 1, l, r, c)) }
-        pending ++= kept.map { case (l, r, _) => (l, r) }
-      }
+      // loop may also exit at the cap or the lookahead horizon: every
+      // UNEXAMINED pair is a potential conflict, so the bound must cover
+      // the best of them (the next uncollected rank / the last collected
+      // row when the table extends past the window)
+      if (cq < 0 && i < top.length) cq = top(i)._3
+      else if (cq < 0 && top.length == lookahead) cq = top.last._3
+      accepted.head +: accepted.tail.takeWhile(_._3 > cq).toSeq
     }
-    (out.toSeq, rounds)
-  }
 
   /** Diagnostic (lastCcRounds precedent): rounds the most recent q142 run
     * needed — the batching evidence the spec and SCALE.md read.
@@ -1130,56 +1092,30 @@ object TextAnalysis {
     * why q145 is property-checked against a plain-Scala reference learner
     * (same algorithm, in-memory) instead of sharing q139's oracle.
     *
-    * Scale shape: unchanged from q139/q142 — everything runs over the
-    * distinct-word vocab table; each round is one map-side-combinable
-    * pair-count aggregation, one bounded `lookahead`-row collect (model-
-    * fit boundary) and one codegen'd merge projection, localCheckpointed.
+    * Scale shape: the q139/q142 round loop ([[bpeLearnRounds]]) —
+    * everything runs over the distinct-word vocab table; each round is one
+    * map-side-combinable pair-count aggregation and one bounded
+    * `lookahead`-row collect (model-fit boundary), with pending merges
+    * applied through one [[graft.functions.expressions.BpeMergeAllExpr]]
+    * projection and cut every [[BpeCkptEveryMerges]] merges.
     */
   def bpeLearnMergesDeep(docs: DataFrame, steps: Int = BpeDeepSteps,
       maxPerRound: Int = 64, lookahead: Int = 256)
-      : (Seq[(Int, String, String, Long)], Int) = {
-    var base = bpeVocab(docs).localCheckpoint()
-    val pending = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rounds = 0
-    var exhausted = false
-    while (out.size < steps && !exhausted) {
-      if (pending.size >= BpeCkptEveryMerges) {
-        base = vocabWithMerges(base, pending.toSeq).localCheckpoint()
-        pending.clear()
+      : (Seq[(Int, String, String, Long)], Int) =
+    bpeLearnRounds(docs, steps, lookahead) { (top, budget) =>
+      val used = scala.collection.mutable.Set.empty[String]
+      val accepted =
+        scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+      var i = 0
+      while (i < top.length && accepted.size < math.min(maxPerRound, budget)) {
+        val (l, r, _) = top(i)
+        if (!used(l) && !used(r)) { accepted += top(i); used += l; used += r }
+        i += 1
       }
-      val top = vocabWithMerges(base, pending.toSeq)
-        .filter(size(col("syms")) >= 2)
-        .select(col("cnt"),
-          slice(col("syms"), lit(1), size(col("syms")) - 1).as("la"),
-          slice(col("syms"), lit(2), size(col("syms")) - 1).as("ra"))
-        .select(col("cnt"), explode(arrays_zip(col("la"), col("ra"))).as("z"))
-        .groupBy(col("z.la").as("l"), col("z.ra").as("r"))
-        .agg(sum(col("cnt")).as("c"))
-        .orderBy(col("c").desc, col("l"), col("r"))
-        .limit(lookahead).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      if (top.isEmpty) exhausted = true
-      else {
-        rounds += 1
-        val used = scala.collection.mutable.Set.empty[String]
-        val accepted =
-          scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        var i = 0
-        while (i < top.length &&
-            accepted.size < math.min(maxPerRound, steps - out.size)) {
-          val (l, r, _) = top(i)
-          if (!used(l) && !used(r)) { accepted += top(i); used += l; used += r }
-          i += 1
-        }
-        accepted.foreach { case (l, r, c) => out += ((out.size + 1, l, r, c)) }
-        // rank order application — and because accepted pairs are symbol-
-        // disjoint, the application order is immaterial to the result
-        pending ++= accepted.map { case (l, r, _) => (l, r) }
-      }
+      // rank order application — and because accepted pairs are symbol-
+      // disjoint, the application order is immaterial to the result
+      accepted.toSeq
     }
-    (out.toSeq, rounds)
-  }
 
   /** Rounds of the most recent q145 run — the deep-K batching evidence. */
   @volatile var lastBpeDeepRounds: Int = -1

@@ -14,8 +14,41 @@ class PlanSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.explainString(
+    formatted(df.queryExecution)
+
+  private def formatted(qe: org.apache.spark.sql.execution.QueryExecution)
+      : String =
+    qe.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+
+  /** The plan that the one `localCheckpoint` cut run while building
+    * `query` materialized. A cut truncates the registered query's own plan
+    * to a checkpoint scan, so pins on the work before it read this plan.
+    * It is re-planned from its logical plan: the executed plan's formatted
+    * explain prints both the final and the initial adaptive plan, which
+    * doubles every operator count. Fails unless the build runs exactly one
+    * cut, so a refactor that moves or adds a cut cannot silently turn a
+    * pin vacuous.
+    */
+  private def cutPlan(name: String,
+      query: => org.apache.spark.sql.DataFrame): String = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val cuts = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        if (funcName == "localCheckpoint") cuts.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      query
+      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(cuts.size == 1,
+      s"$name should run exactly one localCheckpoint, ran ${cuts.size}")
+    formatted(spark.sessionState.executePlan(cuts.peek.logical))
+  }
 
   test("q03: predicates and projection reach the parquet scan") {
     val p = plan(Relational.q03(spark, dir))
@@ -200,12 +233,10 @@ class PlanSpec extends AnyFunSuite {
     // be a broadcast against the one train tokenize pass, not a corpus-wide
     // gram-keyed exchange (q84 pays that shuffle because its threshold is a
     // corpus-global count; q86's membership test has no such need).
-    // Inspected through q86PlanProbe: the registered q86 materializes its
-    // finished rows before the presentation sort (r18 — the sort's range
-    // sampling re-ran the cut chain), which truncates the registered
-    // query's own visible plan to a checkpoint scan + sort; the probe is
-    // the identical computation without that materialization.
-    val p = plan(graft.operators.Dedup.q86PlanProbe(spark, dir))
+    // Inspected through the registered q86's one cut: it materializes its
+    // finished rows before the presentation sort (Materialize.sortCut),
+    // which truncates its own plan to a checkpoint scan + sort.
+    val p = cutPlan("q86", graft.operators.Dedup.q86(spark, dir))
     assert(p.contains("BroadcastHashJoin"), p.take(500))
     // exactly one gh-keyed exchange is legitimate: the EVAL side's distinct
     // (small by premise). A second one means the train gram frame regressed
@@ -436,16 +467,14 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q112/q114: per-row gate batteries stay joinless codegen projections") {
-    // Inspected through the *PlanProbe frames (q86's precedent): the
-    // registered queries localCheckpoint before their presentation sorts
-    // (r18), which truncates their own visible plans to a checkpoint
-    // scan + sort — asserting on those would be vacuous (ADVICE r18).
-    // The probes are the identical computation minus the materialization,
-    // so the assertions see the real gate-battery plan.
+    // Inspected through each registered query's one cut (q86's
+    // precedent): both materialize before their presentation sorts
+    // (Materialize.sortCut), which truncates their own plans to a
+    // checkpoint scan + sort — asserting on those would be vacuous
+    // (ADVICE r18).
     Seq(
-      graft.operators.TextAnalysis.q112PlanProbe(spark, dir),
-      graft.operators.Pipeline.q114PlanProbe(spark, dir)).foreach { df =>
-      val p = plan(df)
+      cutPlan("q112", graft.operators.TextAnalysis.q112(spark, dir)),
+      cutPlan("q114", graft.operators.Pipeline.q114(spark, dir))).foreach { p =>
       assert(!p.contains("ScalaUDF"), "gate fell out of codegen")
       assert(!p.contains("Join"), "a per-row gate must not join")
       assert(!p.contains("HashAggregate"), "a per-row gate must not aggregate")

@@ -166,6 +166,25 @@ class QuantizerSpec extends AnyFunSuite {
       again.map(_.map(_.toSeq).toSeq).toSeq, "fit not deterministic")
   }
 
+  /** The IMI and PQ fits gate on metrics observed by their sample's
+    * checkpoint job: an empty corpus, and a dim too small to split.
+    */
+  test("IMI and PQ fits reject an empty corpus and a dim too small to split") {
+    def vecs(n: Long, dim: Int) = spark.range(n).select(col("id").as("vec_id"),
+      transform(sequence(lit(1), lit(dim)), j =>
+        (col("id") + j).cast("double")).as("v"))
+    def failure(fit: => Any): String =
+      intercept[IllegalArgumentException](fit).getMessage
+    assert(failure(Quantizers.fitImiCodebooks(vecs(0, 8), 16))
+      .contains("IMI quantizer cannot fit an empty corpus"))
+    assert(failure(Quantizers.fitImiCodebooks(vecs(50, 1), 16))
+      .contains("IMI quantizer needs dim >= 2 (first half-space is empty)"))
+    assert(failure(Quantizers.pqFitCodebooks(vecs(0, 8), 4, 8))
+      .contains("PQ quantizer cannot fit an empty corpus"))
+    assert(failure(Quantizers.pqFitCodebooks(vecs(50, 3), 4, 8))
+      .contains("PQ needs dim >= 4 subspaces, got 3"))
+  }
+
   /** Reload equality (round-13 #1): a persisted model must reproduce the
     * fitted original EXACTLY — same centroid doubles, and therefore
     * bit-identical assignments / probe fan-outs / ADC rankings. This is
