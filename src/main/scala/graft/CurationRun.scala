@@ -152,7 +152,9 @@ object CurationRun {
   /** Stage-wall timer for the scale audits (SCALE.md's CurationRun table):
     * every stage boundary in [[run]] is an EAGER materialization
     * (localCheckpoint / sink write), so wrapping the block bounds that
-    * stage's wall. stderr-only observability — no data-path effect.
+    * stage's wall. The `scan_side` branch overlaps the main chain's
+    * stages, so their walls overlap and do not sum to the run's.
+    * stderr-only observability — no data-path effect.
     */
   private def timed[T](label: String)(f: => T): T = {
     val t0 = System.nanoTime()
@@ -178,7 +180,8 @@ object CurationRun {
     catch { case _: java.io.IOException => false })
 
   /** Execute the chain over `sfDir`'s documents table, write all sink
-    * artifacts under `outDir`, and return the manifest (also written).
+    * artifacts under `outDir`, and return the manifest (also written): a
+    * local frame over its collected rows, so reading it starts no job.
     */
   def run(spark: SparkSession, sfDir: String, outDir: String): DataFrame =
     run(spark, sfDir, outDir, CurationParams())
@@ -241,6 +244,51 @@ object CurationRun {
         stripped.filter(
           operators.TextAnalysis.gopherVerdict(col("text"))).localCheckpoint()
       }
+    // From here the run is two concurrent branches ([[Parallel]], one
+    // driver thread each): the scan-only artifacts read nothing past
+    // `docs`, so they overlap the whole funnel → … → sample chain instead
+    // of queueing behind it. Each branch writes its own paths under `art`
+    // from frames that are already materialized or planned from them, so
+    // the overlap changes no output. Everything below the join reads what
+    // BOTH branches wrote.
+    val (manifest, _) = Parallel.both(spark)(
+      curate(spark, sfDir, art, docs, params),
+      timed("scan_side") { writeScanArtifacts(art, scanned, docs, params) })
+    // between-runs monitoring against a REAL prior run: BOTH sides of
+    // both reports are READ from persisted artifacts (one pass + one join
+    // — the collapse q105/q116 promise): the prev side from the prior
+    // run's, the cur side from the files this run just wrote — re-reading
+    // clustered parquet beats re-executing the 11-frame fates lineage /
+    // the scoring pass (the q78 between-stages lesson)
+    params.prevRun.foreach { prior => timed("prev_drift") {
+      val priorRoot = Artifacts.resolve(spark, prior)
+      Pipeline.fateDrift(
+          spark.read.parquet(s"$priorRoot/verdicts/doc_fates")
+            .select(col("doc_id"), col("last_stage").as("fate")),
+          spark.read.parquet(s"$art/verdicts/doc_fates")
+            .select(col("doc_id"), col("last_stage").as("fate")))
+        .write.mode("overwrite").parquet(s"$art/verdicts/drift")
+      operators.TextAnalysis.scoreDriftPsiBetween(
+          spark.read.parquet(s"$priorRoot/verdicts/scores"),
+          spark.read.parquet(s"$art/verdicts/scores"))
+        .write.mode("overwrite").parquet(s"$art/verdicts/psi")
+    } }
+    // the publish: everything above is invisible to readers until this
+    // single pointer swap lands; a crash anywhere earlier leaves the
+    // prior committed run intact
+    Artifacts.commit(spark, outDir, art)
+    manifest
+  }
+
+  /** [[run]]'s main chain: funnel → sem_dedup → line_dedup → span_cut →
+    * source_cap → sampled (→ token_budget), then every artifact derived
+    * from it, written as ONE concurrent block of sinks (each its own path
+    * and job). Returns the manifest as a frame over rows collected ONCE —
+    * `manifest/` is written from the same rows, so a caller's collect
+    * re-runs none of the per-stage stat jobs and outlives the checkpoints.
+    */
+  private def curate(spark: SparkSession, sfDir: String, art: String,
+      docs: DataFrame, params: CurationParams): DataFrame = {
     // curationStages materializes its member frames eagerly, so this block
     // carries the quality-gate + exact-dedup + near-dedup wall
     val funnel = timed("funnel") {
@@ -439,14 +487,12 @@ object CurationRun {
     // whose on-disk row order (pos within shard) IS the deterministic
     // training order, re-runnable to identical bytes and epoch-reseedable
     // via Pipeline.ShuffleSalt
-    val sharded = timed("shards") {
-      corpus.join(
-          Pipeline.trainShards(selected.select(col("doc_id"), col("text")))
-            .select(col("doc_id"), col("shard"), col("pos")),
-          Seq("doc_id"))
-        .select(col("shard"), col("pos"), col("doc_id"), col("lang"),
-          col("source"), col("text"), col("n_tokens"))
-    }
+    val sharded = corpus.join(
+        Pipeline.trainShards(selected.select(col("doc_id"), col("text")))
+          .select(col("doc_id"), col("shard"), col("pos")),
+        Seq("doc_id"))
+      .select(col("shard"), col("pos"), col("doc_id"), col("lang"),
+        col("source"), col("text"), col("n_tokens"))
     // provenance: the operating points this run actually used — a verdict
     // table without its thresholds is not reproducible
     val runParams = {
@@ -464,20 +510,48 @@ object CurationRun {
           "gopher_gate", "quality_keeper", "pack_sequences", "write_scores",
           "token_budget_pct")
     }
-    timed("artifacts") {
-      PartitionedParquet.write(corpus, s"$art/corpus", "lang", "doc_id")
-      PartitionedParquet.write(sharded, s"$art/shards", "shard", "pos")
-      capVerdict.write.mode("overwrite").parquet(s"$art/verdicts/source_cap")
-      sampleVerdict.write.mode("overwrite").parquet(s"$art/verdicts/sample")
-      // no stale-table delete needed for a flag-less rerun (the old
-      // write-scores lesson): every run stages into a FRESH version dir,
-      // so a prior run's budget verdict can't leak into this one's set
-      budgetVerdict.foreach(
-        _.write.mode("overwrite").parquet(s"$art/verdicts/token_budget"))
-      fates.write.mode("overwrite").parquet(s"$art/verdicts/doc_fates")
-      runParams.coalesce(1).write.mode("overwrite").parquet(s"$art/run_params")
-      manifest.coalesce(1).write.mode("overwrite").parquet(s"$art/manifest")
+    // the sinks are independent writes of frames the chain already
+    // materialized (mostly single-task jobs): run them side by side. The
+    // manifest is collected once, here, and written from those rows.
+    val (collected, _) = timed("sinks") { Parallel.both(spark)(
+      {
+        val local = spark.createDataFrame(
+          java.util.Arrays.asList(manifest.collect(): _*), manifest.schema)
+        local.coalesce(1).write.mode("overwrite").parquet(s"$art/manifest")
+        local
+      },
+      Parallel.all(spark)(
+        () => PartitionedParquet.write(corpus, s"$art/corpus", "lang", "doc_id"),
+        () => PartitionedParquet.write(sharded, s"$art/shards", "shard", "pos"),
+        () => capVerdict.write.mode("overwrite")
+          .parquet(s"$art/verdicts/source_cap"),
+        () => sampleVerdict.write.mode("overwrite")
+          .parquet(s"$art/verdicts/sample"),
+        // no stale-table delete needed for a flag-less rerun (the old
+        // write-scores lesson): every run stages into a FRESH version dir,
+        // so a prior run's budget verdict can't leak into this one's set
+        () => budgetVerdict.foreach(
+          _.write.mode("overwrite").parquet(s"$art/verdicts/token_budget")),
+        () => fates.write.mode("overwrite")
+          .parquet(s"$art/verdicts/doc_fates"),
+        () => runParams.coalesce(1).write.mode("overwrite")
+          .parquet(s"$art/run_params"),
+        // opt-in q124 layout: the packed training-sequence plan over the
+        // SAME survivors the shards stage laid out (next-fit in q100's
+        // salted order, so shard here == shards/'s shard) — the
+        // dataloader reads sequences instead of padding per row
+        () => if (params.packSequences)
+          Pipeline.packSequences(selected.select(col("doc_id"), col("text")))
+            .write.mode("overwrite").parquet(s"$art/layout/sequences")))
     }
+    collected
+  }
+
+  /** [[run]]'s side branch: the artifacts that read only the scan, so
+    * they need nothing from the main chain.
+    */
+  private def writeScanArtifacts(art: String, scanned: DataFrame,
+      docs: DataFrame, params: CurationParams): Unit = {
     // the persistable dedup-index state (q78's production contract): exact
     // md5 keys, hashed shingle sets, and the LSH band index over the
     // snapshot this run ingested (the same population doc_fates covers) —
@@ -485,30 +559,20 @@ object CurationRun {
     // against WITHOUT re-deduping, or even rescanning, this corpus. One
     // extra shingle pass over the checkpointed scan; the shingle table is
     // ~8 B/shingle, far under the text it summarizes.
-    timed("dedup_index") {
-      val keyed = docs.select(col("doc_id"), col("text"))
-      Dedup.exactKeyIndex(keyed)
-        .write.mode("overwrite").parquet(s"$art/index/dedup/exact")
-      val sh = Dedup.nearDupShingles(keyed).localCheckpoint()
-      sh.write.mode("overwrite").parquet(s"$art/index/dedup/shingles")
-      Dedup.nearDupBandIndex(sh)
-        .write.mode("overwrite").parquet(s"$art/index/dedup/bands")
-      // the seen-id set an --incremental successor anti-joins to find its
-      // arrivals. Deliberately the RAW scanned ids, not doc_fates: fates
-      // exclude the eval-side holdout (doc_id % EvalEvery == 0), which a
-      // later snapshot still contains — fates-based arrival detection
-      // would re-verdict the holdout every night
-      scanned.select(col("doc_id")).distinct()
-        .write.mode("overwrite").parquet(s"$art/index/seen")
-    }
-    // opt-in q124 layout: the packed training-sequence plan over the SAME
-    // survivors the shards stage laid out (next-fit in q100's salted
-    // order, so shard here == shards/'s shard) — the dataloader reads
-    // sequences instead of padding per row
-    if (params.packSequences) timed("pack") {
-      Pipeline.packSequences(selected.select(col("doc_id"), col("text")))
-        .write.mode("overwrite").parquet(s"$art/layout/sequences")
-    }
+    val keyed = docs.select(col("doc_id"), col("text"))
+    Dedup.exactKeyIndex(keyed)
+      .write.mode("overwrite").parquet(s"$art/index/dedup/exact")
+    val sh = Dedup.nearDupShingles(keyed).localCheckpoint()
+    sh.write.mode("overwrite").parquet(s"$art/index/dedup/shingles")
+    Dedup.nearDupBandIndex(sh)
+      .write.mode("overwrite").parquet(s"$art/index/dedup/bands")
+    // the seen-id set an --incremental successor anti-joins to find its
+    // arrivals. Deliberately the RAW scanned ids, not doc_fates: fates
+    // exclude the eval-side holdout (doc_id % EvalEvery == 0), which a
+    // later snapshot still contains — fates-based arrival detection
+    // would re-verdict the holdout every night
+    scanned.select(col("doc_id")).distinct()
+      .write.mode("overwrite").parquet(s"$art/index/seen")
     // per-doc classifier scores of the RAW snapshot (pre-gate, so two
     // runs' tables describe the same population even when their gate
     // params differ) — the between-runs monitoring artifact the next
@@ -516,39 +580,14 @@ object CurationRun {
     // full-snapshot token-explode pass (the one stage whose sf10 wall
     // dominated the round-13 profile), so a run whose output will never
     // seed a monitoring chain can opt out with --write-scores false
-    if (params.writeScores) timed("scores") {
+    if (params.writeScores)
       operators.TextAnalysis.classifierScoresUnsorted(
           scanned.select(col("doc_id"), col("text")))
         .write.mode("overwrite").parquet(s"$art/verdicts/scores")
-    }
     // (an opted-out run needs no stale-scores delete anymore: the fresh
     // staging version starts empty, so a later --prev-run reading THIS
     // run finds no scores table and fails loudly — the hazard the old
     // Hadoop-FileSystem delete existed to close is gone structurally)
-    // between-runs monitoring against a REAL prior run: BOTH sides of
-    // both reports are READ from persisted artifacts (one pass + one join
-    // — the collapse q105/q116 promise): the prev side from the prior
-    // run's, the cur side from the files this run just wrote — re-reading
-    // clustered parquet beats re-executing the 11-frame fates lineage /
-    // the scoring pass (the q78 between-stages lesson)
-    params.prevRun.foreach { prior => timed("prev_drift") {
-      val priorRoot = Artifacts.resolve(spark, prior)
-      Pipeline.fateDrift(
-          spark.read.parquet(s"$priorRoot/verdicts/doc_fates")
-            .select(col("doc_id"), col("last_stage").as("fate")),
-          spark.read.parquet(s"$art/verdicts/doc_fates")
-            .select(col("doc_id"), col("last_stage").as("fate")))
-        .write.mode("overwrite").parquet(s"$art/verdicts/drift")
-      operators.TextAnalysis.scoreDriftPsiBetween(
-          spark.read.parquet(s"$priorRoot/verdicts/scores"),
-          spark.read.parquet(s"$art/verdicts/scores"))
-        .write.mode("overwrite").parquet(s"$art/verdicts/psi")
-    } }
-    // the publish: everything above is invisible to readers until this
-    // single pointer swap lands; a crash anywhere earlier leaves the
-    // prior committed run intact
-    Artifacts.commit(spark, outDir, art)
-    manifest
   }
 
   /** The `--incremental <priorRun>` mode: the q78 verdict as a RUN, served

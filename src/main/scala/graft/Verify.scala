@@ -27,6 +27,7 @@ object Verify {
       catch { case e: Throwable =>
         failed += 1
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        e.printStackTrace()
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -195,7 +195,6 @@ object Quantizers {
   def pqFitCodebooks(clean: DataFrame, m: Int,
       k: Int): Array[Array[Array[Double]]] = {
     import org.apache.spark.ml.functions.array_to_vector
-    import scala.collection.parallel.CollectionConverters._
     // count AND dim ride the checkpoint job (min(size(v)) equals a
     // first-row dim probe on the uniform-dim input the fit requires)
     val (sample, Row(n: Long, dim: Int)) = Materialize.cut(
@@ -204,19 +203,20 @@ object Quantizers {
     require(n > 0, "PQ quantizer cannot fit an empty corpus")
     require(dim >= m, s"PQ needs dim >= $m subspaces, got $dim")
     // the M fits are independent jobs over the one materialized sample —
-    // submit them concurrently (driver threads; local[32] has the slack,
-    // and on a cluster the scheduler interleaves their tiny stages).
-    // Sequential fits made the fit wall M× one fit and dominated q98.
-    // .par preserves index order, and each fit is seed-42 deterministic,
-    // so the codebooks are bit-identical to the sequential form's.
-    (0 until m).toArray.par.map { i =>
+    // submit them concurrently (one driver thread each; local[32] has the
+    // slack, and on a cluster the scheduler interleaves their tiny
+    // stages). Sequential fits made the fit wall M× one fit and dominated
+    // q98. Results come back in subspace order, and each fit is seed-42
+    // deterministic, so the codebooks are bit-identical to the sequential
+    // form's.
+    graft.Parallel.all(sample.sparkSession)((0 until m).map { i => () =>
       val lo = dim * i / m
       val hi = dim * (i + 1) / m
       kmeansCenters(
         sample.select(array_to_vector(
           slice(col("v"), lit(lo + 1), lit(hi - lo))).as("fv")),
         math.min(k, n.toInt))
-    }.toArray
+    }: _*).toArray
   }
 
   /** The bounded deterministic fit sample (see [[fitCentroids]] for why the

@@ -1032,21 +1032,16 @@ object Similarity {
     if (n == 0) return emptyTopK(spark)
     // The coarse-quantizer and PQ-codebook fits are data-independent reads
     // of the same materialized base (each draws its own deterministic
-    // sample); submitting one from a second driver thread overlaps their
-    // tiny sequential Lloyd stages (guide §2.6 — the scheduler happily
+    // sample); running them as two driver branches overlaps their tiny
+    // sequential Lloyd stages (guide §2.6 — the scheduler happily
     // interleaves two jobs' stages; measured sequential: coarse 0.87 s +
     // PQ 1.17 s, warm). Each fit is seed-42-deterministic over its own
     // sample, so concurrency cannot change either result — the same
-    // argument as pqFitCodebooks' internal .par over subspaces.
-    val quantF = scala.concurrent.Future {
-      org.apache.spark.sql.SparkSession.setActiveSession(spark)
-      Quantizers.quantizerFor(base, ivfCellsFor(n))
-    }(scala.concurrent.ExecutionContext.global)
-    val cbs = Quantizers.pqFitCodebooks(base, PqSubspaces, PqCodewords)
-    ivfPqTopK(base,
-      scala.concurrent.Await.result(quantF,
-        scala.concurrent.duration.Duration.Inf),
-      cbs)
+    // argument as pqFitCodebooks' branches over subspaces.
+    val (quant, cbs) = graft.Parallel.both(spark)(
+      Quantizers.quantizerFor(base, ivfCellsFor(n)),
+      Quantizers.pqFitCodebooks(base, PqSubspaces, PqCodewords))
+    ivfPqTopK(base, quant, cbs)
   }
 
   /** q101b: q101's DETERMINISTIC-SEED twin — ONE seed set (the

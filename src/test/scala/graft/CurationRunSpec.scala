@@ -22,10 +22,9 @@ class CurationRunSpec extends AnyFunSuite {
   private def art(d: String): String =
     graft.sources.Artifacts.resolve(spark, d)
 
-  private lazy val outDir = {
+  private lazy val (outDir, returnedManifest) = {
     val d = Files.createTempDirectory("curation_run").toString
-    CurationRun.run(spark, sfDir, d).collect() // materialize once
-    d
+    (d, CurationRun.run(spark, sfDir, d))
   }
 
   test("manifest's first six rows equal q88's funnel (the oracle surface)") {
@@ -43,6 +42,29 @@ class CurationRunSpec extends AnyFunSuite {
     manifest.sliding(2).drop(1).foreach { case Array(a, b) =>
       assert(b._3 <= a._3 && b._4 <= a._4, s"stage ${b._2} grew vs ${a._2}")
     }
+  }
+
+  test("the returned manifest is the written one, and collecting it starts no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val returned = returnedManifest // the run itself happens outside the count
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    val rows = try {
+      val r = returned.collect()
+      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+      r
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get === 0, "the manifest must be collected once, inside run")
+    val written = spark.read.parquet(s"${art(outDir)}/manifest").collect()
+    assert(rows.toSeq === written.toSeq, "returned rows differ from manifest/")
+    assert(returned.schema.map(f => f.name -> f.dataType) ===
+      written.head.schema.map(f => f.name -> f.dataType))
   }
 
   test("sem_dedup's doc_id == vec_id keying contract holds on the fixture") {

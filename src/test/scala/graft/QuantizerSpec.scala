@@ -135,7 +135,8 @@ class QuantizerSpec extends AnyFunSuite {
     * its own slice — a transposed slice (codebook m fit on the wrong dims)
     * fails the range check because the synthetic ranges differ per dim
     * block. Determinism: two fits over the same frame are bit-identical
-    * (the .par fan-out must not introduce order dependence).
+    * (the concurrent per-subspace fits must not introduce order
+    * dependence).
     */
   test("pqFitCodebooks: ragged-dim slice widths, per-slice value ranges, deterministic") {
     val n = 500L
